@@ -510,7 +510,7 @@ def _stream_dedup(spark, sf_dir):
 
     name = f"t_dedup_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(streaming.dedup_within_watermark(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(streaming.dedup_within_watermark(stream), name, "append")
     return spark.table(name).select("event_id", "user_id", "event_type", "value", "props")
 
 
@@ -526,7 +526,7 @@ def _stream_curate(spark, sf_dir):
 
     name = f"t_curate_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_documents_stream(spark, sf_dir, "documents.parquet")
-    streaming.run_to_memory(streaming.curate_stream(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(streaming.curate_stream(stream), name, "append")
     return spark.table(name)
 
 
@@ -604,7 +604,7 @@ def _stream_cdc(spark, sf_dir):
         .parquet(land)
     )
     snap = os.path.join(root, "snapshot")
-    streaming.run_cdc_snapshot(spark, stream, snap, key="k", source_dir=land)
+    streaming.run_cdc_snapshot(spark, stream, snap, key="k")
     return spark.read.parquet(snap).select("k", "name", "val")
 
 
@@ -618,7 +618,7 @@ def _stream_running_totals(spark, sf_dir):
     name = f"t_totals_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
     streaming.run_to_memory(
-        streaming.running_totals_per_user(stream), name, "update", source_dir=sf_dir
+        streaming.running_totals_per_user(stream), name, "update"
     )
     # running totals are monotone in n → the final state is max(n)
     return (
@@ -641,7 +641,7 @@ def _stream_tumbling(spark, sf_dir):
 
     name = f"t_tumb_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(streaming.tumbling_counts(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(streaming.tumbling_counts(stream), name, "append")
     return spark.table(name).select(
         "w_start", "w_end", "event_type", "n", F.round("total", 4).alias("total")
     )
@@ -664,7 +664,7 @@ def _stream_distinct(spark, sf_dir):
 
     name = f"t_hlls_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(windowed_distinct_users(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(windowed_distinct_users(stream), name, "append")
     got = spark.table(name)
     ev = _db(spark, sf_dir).table("events")
     exact = (
@@ -706,7 +706,7 @@ def _stream_quantiles(spark, sf_dir):
 
     name = f"t_qtl_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(windowed_value_quantiles(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(windowed_value_quantiles(stream), name, "append")
     return spark.table(name).select(
         "w_start",
         "event_type",
@@ -728,7 +728,7 @@ def _stream_topk(spark, sf_dir):
 
     name = f"t_topk_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(windowed_user_counts(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(windowed_user_counts(stream), name, "append")
     return rank_top_users(spark.table(name), k=3)
 
 
@@ -746,7 +746,7 @@ def _stream_anomaly(spark, sf_dir):
 
     name = f"t_anom_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(streaming_anomalies(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(streaming_anomalies(stream), name, "append")
     return spark.table(name).select(
         "event_id", "event_type", "value", "n_prior", F.round("z", 4).alias("z4")
     )
@@ -784,7 +784,7 @@ def _stream_sliding(spark, sf_dir):
 
     name = f"t_slide_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
-    streaming.run_to_memory(streaming.sliding_event_avg(stream), name, "append", source_dir=sf_dir)
+    streaming.run_to_memory(streaming.sliding_event_avg(stream), name, "append")
     return spark.table(name).select(
         "w_start", F.round("avg_value", 4).alias("avg_value"), "n"
     )
@@ -798,7 +798,7 @@ def _stream_join(spark, sf_dir):
     name = f"t_ssj_{uuid.uuid4().hex[:8]}"
     stream = streaming.read_events_stream(spark, sf_dir)
     streaming.run_to_memory(
-        streaming.purchases_join_clicks_stream(stream), name, "append", source_dir=sf_dir
+        streaming.purchases_join_clicks_stream(stream), name, "append"
     )
     return spark.table(name)
 
@@ -823,7 +823,7 @@ def _stream_enrich(spark, sf_dir):
     stream = streaming.read_events_stream(spark, sf_dir)
     customer = _db(spark, sf_dir).table("customer")
     streaming.run_to_memory(
-        streaming.purchases_enriched(stream, customer), name, "append", source_dir=sf_dir
+        streaming.purchases_enriched(stream, customer), name, "append"
     )
     return spark.table(name)
 

@@ -474,7 +474,7 @@ def apply_cdc(
     operator with a scale-shaped plan.
 
     100 TB posture: the snapshot side is NEVER shuffled.  Last-writer
-    resolution windows over the (batch-sized) ``changes`` only, and
+    resolution aggregates over the (batch-sized) ``changes`` only, and
     the snapshot is filtered by a left-anti join against the batch's
     key SET — one narrow column, broadcast by default, so even a
     wide multi-million-row change batch costs the snapshot a single

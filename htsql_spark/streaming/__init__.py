@@ -1,13 +1,12 @@
 from .events import (  # noqa: F401
     dedup_within_watermark,
+    drain,
     enrich_with_dim,
     purchases_enriched,
     purchases_join_clicks_stream,
     rank_top_users,
     read_events_stream,
-    run_foreach_batch,
     run_to_memory,
-    run_to_parquet,
     running_totals_per_user,
     session_counts,
     sliding_event_avg,

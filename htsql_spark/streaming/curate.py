@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .events import drain
+
 
 def read_documents_stream(
     spark: SparkSession, sf_dir: str, glob: str = "*.parquet"
@@ -255,12 +257,11 @@ def run_dedup_ingest(
             threshold, k=k, num_hashes=num_hashes, bands=bands,
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{archive_path}__checkpoint")
-        .start()
-        .awaitTermination()
+    drain(
+        stream,
+        lambda w: w.foreachBatch(process).option(
+            "checkpointLocation", f"{archive_path}__checkpoint"
+        ),
     )
 
 
@@ -450,12 +451,11 @@ def run_exact_dedup_ingest(
     def process(batch: DataFrame, batch_id: int) -> None:
         _process_exact_batch(spark, batch, base + batch_id, archive_path, fpp)
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{archive_path}__checkpoint")
-        .start()
-        .awaitTermination()
+    drain(
+        stream,
+        lambda w: w.foreachBatch(process).option(
+            "checkpointLocation", f"{archive_path}__checkpoint"
+        ),
     )
 
 

@@ -20,12 +20,13 @@ are comparable with batch oracles.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _GLOB = "events.parquet"
@@ -53,7 +54,7 @@ def derive_stream_partitions(
     target_bytes: int = 64 * 1024 * 1024,
     per_core_cap: int = 8,
     compute_floor: bool = False,
-) -> int:
+) -> int | None:
     """Scale-adaptive shuffle/state partition count for a streaming
     query, derived from the SOURCE DATA SIZE (guide §2.2: partitions
     in the 100 MB–1 GB range, never a constant tuned to one machine):
@@ -91,14 +92,11 @@ def derive_stream_partitions(
     with a big batch warehouse in the SAME directory is sized by its
     own files, not the warehouse's.
 
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides the derivation (any
-    positive integer), for deployments that know better."""
+    :func:`drain` is the only caller in the engine: every streaming
+    query is sized here, from :func:`stream_source_paths` of its own
+    plan."""
     import math
-    import os
 
-    forced = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if forced:
-        return max(1, int(forced))
     total = 0
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
@@ -138,8 +136,11 @@ def stream_source_paths(df: DataFrame) -> "list[tuple[str, str | None]]":
     warehouse's partition count and pay its state-store commit
     fan-out; this repo's own readers point at the shared directory
     with a ``pathGlobFilter``, so the glob IS the source identity).
-    Non-file sources (kafka, rate) contribute nothing — callers fall
-    back."""
+    A ``recursiveFileLookup`` source reads its whole tree, and its
+    glob only filters leaf names at any depth, so it is sized as the
+    whole tree (glob ``None``) — the glob alone would match only
+    direct children.  Non-file sources (kafka, rate) contribute
+    nothing — callers fall back."""
     out: list[tuple[str, str | None]] = []
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
@@ -149,8 +150,12 @@ def stream_source_paths(df: DataFrame) -> "list[tuple[str, str | None]]":
             if name.startswith("FileSource[") and name.endswith("]"):
                 glob = None
                 try:
-                    opt = n.dataSource().options().get("pathGlobFilter")
-                    if opt.isDefined():
+                    opts = n.dataSource().options()
+                    opt = opts.get("pathGlobFilter")
+                    rec = opts.get("recursiveFileLookup")
+                    if opt.isDefined() and not (
+                        rec.isDefined() and rec.get().lower() == "true"
+                    ):
                         glob = opt.get()
                 except Exception:
                     pass
@@ -201,6 +206,46 @@ class _stream_conf:
             finally:
                 _STREAM_CONF_LOCK.release()
         return False
+
+
+def drain(
+    sdf: DataFrame,
+    configure: Callable[[DataStreamWriter], DataStreamWriter],
+    trigger: dict | None = None,
+    wait: bool = True,
+) -> StreamingQuery:
+    """Start ``sdf`` as a Structured Stream and, by default, drain it:
+    the one start path of every streaming query in the engine.
+
+    ``configure`` receives ``sdf.writeStream`` and returns the
+    prepared writer (sink, output mode, checkpoint).  It is a callable
+    because ``writeStream`` on a batch DataFrame already fails with an
+    opaque AnalysisException; the named error comes first here.
+
+    Shuffle/state partitions are sized from the stream's own file
+    sources (:func:`stream_source_paths`) by
+    :func:`derive_stream_partitions`, floored at defaultParallelism
+    for Python-stateful plans; a plan with no measurable file source
+    keeps the session default.  The value is set only for the
+    ``.start()`` window (:class:`_stream_conf`).  ``trigger`` defaults
+    to ``{"availableNow": True}``; ``wait=False`` returns the running
+    query without awaiting it (the live serve path)."""
+    _require_stream(sdf, "drain()")
+    spark = sdf.sparkSession
+    parts = derive_stream_partitions(
+        spark,
+        *stream_source_paths(sdf),
+        compute_floor=_has_python_stateful(sdf),
+    )
+    with _stream_conf(spark, parts):
+        q = (
+            configure(sdf.writeStream)
+            .trigger(**(trigger or {"availableNow": True}))
+            .start()
+        )
+    if wait:
+        q.awaitTermination()
+    return q
 
 
 def _events_schema(
@@ -679,80 +724,19 @@ def expanding_anomalies(
     )
 
 
-def run_to_parquet(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-):
-    """Durable sink: stream to a parquet directory with exactly-once
-    checkpointing (the production path; the memory sink below is the
-    test/inspection path).  Uses availableNow so callers can drain the
-    current backlog and return."""
-    _require_stream(stream_df, "run_to_parquet()")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def run_foreach_batch(stream_df: DataFrame, fn, output_mode: str = "update"):
-    """Custom sink via foreachBatch — fn(batch_df, batch_id) runs with
-    a *batch* DataFrame per micro-batch (merge/upsert patterns)."""
-    _require_stream(stream_df, "run_foreach_batch()")
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "append",
-    source_dir: str | None = None,
 ):
     """Drive a streaming DataFrame to completion over the available
     input (availableNow trigger) into an in-memory table; returns the
-    query handle after termination.  ``source_dir``: when given, the
-    query's shuffle/state partition count is derived from the source
-    data size (:func:`derive_stream_partitions`) instead of the
-    session default — the scale-adaptive posture for state-store
-    commit cost."""
-    _require_stream(stream_df, "run_to_memory()")
-    spark = stream_df.sparkSession
-    parts = None
-    if source_dir is not None:
-        # prefer the stream's OWN file sources (analyzed plan) over
-        # the caller's directory hint — the hint is often the whole
-        # mount, and a small stream must not pay a big warehouse's
-        # state-store fan-out (r14)
-        srcs = stream_source_paths(stream_df) or [source_dir]
-        parts = derive_stream_partitions(
-            spark,
-            *srcs,
-            compute_floor=_has_python_stateful(stream_df),
-        )
-    with _stream_conf(spark, parts):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return q
+    query handle after termination.  Partitions are sized by
+    :func:`drain` from the stream's own file sources."""
+    return drain(
+        stream_df,
+        lambda w: w.format("memory").queryName(name).outputMode(output_mode),
+    )
 
 
 def windowed_distinct_users(

@@ -51,6 +51,7 @@ from ..operators.layout import (
     release_dataset_lock,
     replace_dataset,
 )
+from .events import drain
 
 #: reader-visible partition column of a bucketed snapshot.  It cannot
 #: start with ``_`` (Spark's file listing hides such paths, which
@@ -385,7 +386,6 @@ def run_cdc_snapshot(
     delete_op: str = "D",
     snapshot_files: int = 8,
     buckets: int | None = None,
-    source_dir: str | None = None,
 ) -> None:
     """Drive :func:`apply_cdc_batch` from a Structured Streaming
     change source with ``availableNow`` (drain the backlog, then
@@ -395,11 +395,8 @@ def run_cdc_snapshot(
     earlier one's regardless of ts — CDC logs replay in order), and
     within a batch by (``ts_col``, ``op_col`` desc) per apply_cdc's
     contract.  ``buckets=N`` selects the hash-bucketed snapshot
-    layout (per-epoch I/O scoped to touched buckets).
-    ``source_dir``: when given, shuffle/state partitions are derived
-    from the source data size (events.derive_stream_partitions)
-    instead of the session default."""
-    from .events import _stream_conf, derive_stream_partitions
+    layout (per-epoch I/O scoped to touched buckets).  Partitions are
+    sized by :func:`events.drain` from the stream's own sources."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
@@ -414,16 +411,9 @@ def run_cdc_snapshot(
             buckets=buckets,
         )
 
-    parts = (
-        derive_stream_partitions(spark, source_dir)
-        if source_dir is not None
-        else None
+    drain(
+        stream,
+        lambda w: w.foreachBatch(process).option(
+            "checkpointLocation", f"{snapshot_path}__checkpoint"
+        ),
     )
-    with _stream_conf(spark, parts):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{snapshot_path}__checkpoint")
-            .start()
-        )
-    q.awaitTermination()

@@ -336,8 +336,9 @@ def test_apply_cdc_validation(spark):
 
 def test_apply_cdc_snapshot_never_shuffled(spark):
     """The 100 TB contract: no Exchange on the snapshot side — the
-    anti join broadcasts the batch key set and the only shuffle in
-    the whole plan is the window over the (small) change batch."""
+    anti join broadcasts the batch key set and the only shuffles in
+    the whole plan are the change batch's: its last-writer ``max_by``
+    aggregation and its distinct key set."""
     base = _cdc_base(spark)
     chg = _cdc_changes(spark, [(2, "b2", 21.0, 1, "U")])
     plan = (
@@ -345,8 +346,8 @@ def test_apply_cdc_snapshot_never_shuffled(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    # every Exchange must be a broadcast one or sit under the window
-    # (the change batch); the base scan feeds the anti join directly
+    # every Exchange must be a broadcast one or sit under the change
+    # batch's aggregations; the base scan feeds the anti join directly
     lines = plan.splitlines()
     anti = next(i for i, l in enumerate(lines) if "LeftAnti" in l)
     # the left (streamed) side of the anti join appears after the join
@@ -360,14 +361,16 @@ def test_apply_cdc_fuzz_vs_sequential_replay(spark):
     """Property lock: apply_cdc over a random batch equals a
     driver-side sequential replay (sort by (ts, op desc), apply one
     by one onto a dict).  Catches last-writer, tie-break, anti-join,
-    and column-order drift in one property."""
+    and column-order drift in one property.  ``ts`` may be null: a
+    null ts loses to any non-null ts, and among a key's null-ts
+    changes the op-desc tie-break decides."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     keys = st.integers(min_value=0, max_value=9)
     change = st.tuples(
         keys,
-        st.integers(min_value=0, max_value=99),   # ts
+        st.one_of(st.none(), st.integers(min_value=0, max_value=99)),  # ts
         st.sampled_from(["U", "I", "D"]),
         st.integers(min_value=0, max_value=999),  # payload
     )
@@ -387,13 +390,17 @@ def test_apply_cdc_fuzz_vs_sequential_replay(spark):
                 batch.append((k, ts, op, val))
         base_rows = [(k, k * 10.0) for k in range(5)]
         expected = dict(base_rows)
-        # replay in (ts, op desc) order; later beats earlier, and at
-        # equal ts the op-desc winner is what apply_cdc keeps — so
-        # apply only the LAST (winning) change per key
+        # replay in (ts, op desc) order; later beats earlier, a null
+        # ts sorts before every non-null one, and at equal ts the
+        # op-desc winner is what apply_cdc keeps — so apply only the
+        # LAST (winning) change per key
+        def rank(ts, op):
+            return (ts is not None, ts or 0, op)
+
         winner = {}
         for k, ts, op, val in batch:
             cur = winner.get(k)
-            if cur is None or (ts, op) > (cur[0], cur[1]):
+            if cur is None or rank(ts, op) > rank(cur[0], cur[1]):
                 winner[k] = (ts, op, val)
         for k, (ts, op, val) in winner.items():
             if op == "D":

@@ -105,15 +105,20 @@ def test_parquet_sink_checkpointed(spark, events_stream, tmp_path):
     from htsql_spark import streaming
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    streaming.run_to_parquet(
-        streaming.dedup_within_watermark(events_stream), out, ckpt
-    )
+
+    def parquet_sink(w):
+        return (
+            w.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+        )
+
+    streaming.drain(streaming.dedup_within_watermark(events_stream), parquet_sink)
     back = spark.read.parquet(out)
     assert back.count() == back.select("event_id").distinct().count() > 0
     # re-running against the same checkpoint is a no-op (exactly-once)
-    streaming.run_to_parquet(
-        streaming.dedup_within_watermark(events_stream), out, ckpt
-    )
+    streaming.drain(streaming.dedup_within_watermark(events_stream), parquet_sink)
     assert spark.read.parquet(out).count() == back.count()
 
 
@@ -127,8 +132,9 @@ def test_foreach_batch_custom_sink(spark, events_stream):
     def sink(batch_df, batch_id):
         seen.append(batch_df.agg(F.count(F.lit(1))).collect()[0][0])
 
-    streaming.run_foreach_batch(
-        streaming.tumbling_counts(events_stream), sink
+    streaming.drain(
+        streaming.tumbling_counts(events_stream),
+        lambda w: w.foreachBatch(sink).outputMode("update"),
     )
     assert sum(seen) > 0
 
@@ -2022,13 +2028,13 @@ def test_within_custom_watermark(db):
     assert _norm_rows(streamed) == _norm_rows(batch)
 
 
-def test_derive_stream_partitions(spark, tmp_path, monkeypatch):
+def test_derive_stream_partitions(spark, tmp_path):
     """Scale-adaptive stream partitioning (r13): partitions derive
     from source bytes (ceil(bytes/target), floor 1, cap 8×cores),
     Python-stateful plans floor at defaultParallelism (compute-bound
     — data-sized partitioning would serialize the per-group pandas
-    calls), the env override wins, and _stream_conf restores the
-    session conf after the start window."""
+    calls), and _stream_conf restores the session conf after the
+    start window."""
     from htsql_spark.streaming.events import (
         _stream_conf,
         derive_stream_partitions,
@@ -2056,10 +2062,6 @@ def test_derive_stream_partitions(spark, tmp_path, monkeypatch):
         derive_stream_partitions(spark, str(small), target_bytes=1)
         == 8 * par
     )
-    # env override wins over the derivation
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "7")
-    assert derive_stream_partitions(spark, str(small)) == 7
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS")
     # r14: unmeasurable sources fall back to the SESSION DEFAULT
     # (None), never collapse to 1 — an unreachable scheme or missing
     # path totalling 0 bytes must not pin 1 shuffle/state partition
@@ -2092,7 +2094,7 @@ def test_derive_stream_partitions(spark, tmp_path, monkeypatch):
     assert spark.conf.get(key) == before
 
 
-def test_stream_source_paths(spark):
+def test_stream_source_paths(spark, tmp_path):
     """stream_source_paths reads the FileStreamSource path off the
     analyzed plan — the engine sizes partition derivation by the
     stream's OWN source, not the whole mounted dir (r14)."""
@@ -2121,6 +2123,28 @@ def test_stream_source_paths(spark):
     assert derive_stream_partitions(spark, (sf, "no-such-*.parquet")) is None
     # batch plans have no streaming relations
     assert stream_source_paths(spark.range(3)) == []
+    # a recursiveFileLookup source (the CDC landing shape: one
+    # sub-directory per change batch) is sized as its whole tree — its
+    # glob matches leaf names at any depth, so the glob alone would
+    # match no direct child and fall back to the session default; the
+    # count equals the whole-directory derivation
+    land = tmp_path / "land"
+    df = spark.range(50).selectExpr("id AS k", "id * 2 AS v")
+    for sub in ("b1", "b2"):
+        df.coalesce(1).write.parquet(str(land / sub))
+    src = (
+        spark.readStream.schema(df.schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .parquet(str(land))
+    )
+    paths = stream_source_paths(src)
+    assert len(paths) == 1
+    path, glob = paths[0]
+    assert path.rstrip("/").endswith("land") and glob is None
+    assert derive_stream_partitions(spark, (str(land), "*.parquet")) is None
+    sized = derive_stream_partitions(spark, *paths)
+    assert sized == derive_stream_partitions(spark, str(land)) == 1
 
 
 def test_stream_partitions_pin_into_checkpoint(spark, tmp_path):
