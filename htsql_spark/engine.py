@@ -82,7 +82,6 @@ class HTSQL:
         #: their order.  ordered=True restores full parity for
         #: regress-style consumers.
         self.ordered = ordered
-        self.last_format: str | None = None  # format used by last emit()
         self.broadcast_tables = BROADCAST_TABLES
         self._counter = itertools.count()
         self._tables: dict[str, DataFrame] = {}
@@ -386,15 +385,6 @@ class HTSQL:
         return gw
 
     # -- query API -----------------------------------------------------
-    def df(self, query: str) -> DataFrame:
-        """Compile query text → DataFrame (no action triggered)."""
-        node = parse(query)
-        fmt, node = self._strip_format(node)
-        df = Compiler(self).compile_query(node)
-        if self.autolimit:
-            df = df.limit(self.autolimit)
-        return df
-
     def _strip_format(self, node: N.Node):
         inner = node.op if isinstance(node, N.Segment) else node
         if isinstance(inner, N.Apply) and inner.name.lower() in FORMAT_NAMES and len(inner.args) == 1:
@@ -403,17 +393,29 @@ class HTSQL:
             )
         return None, node
 
-    def produce(self, query: str) -> list[dict]:
-        """Execute and return rows as plain dicts (nested lists/records
-        included).  Honors ``timeout`` (reference:
-        src/htsql/tweak/timeout/ — statement execution deadline)."""
-        df = self.df(query)
+    def _prepare(self, query: str, limit: bool = True) -> tuple[str | None, DataFrame]:
+        """Every entry point's compile step: parse, strip a ``/:fmt``
+        pipe (returned, or None), compile, apply ``autolimit`` unless
+        ``limit=False``."""
+        fmt, node = self._strip_format(parse(query))
+        df = Compiler(self).compile_query(node)
+        if limit and self.autolimit:
+            df = df.limit(self.autolimit)
+        return fmt, df
+
+    def _answer(self, query: str, action, limit: bool = True):
+        """``action(*self._prepare(query, limit))`` under ``timeout``
+        (reference: src/htsql/tweak/timeout/): the deadline spans parse
+        to the last row, compile-time operator jobs included, and a
+        passed one raises ``TimeoutError``.  Jobs carry a thread-local
+        job tag, so the caller's job group is left alone."""
         if not self.timeout:
-            return [row.asDict(recursive=True) for row in df.collect()]
+            return action(*self._prepare(query, limit))
         import threading
+        import uuid
 
         sc = self.spark.sparkContext
-        group = self.fresh("htsql_timeout_")
+        tag = f"htsql_deadline_{uuid.uuid4().hex}"
         fired = threading.Event()
         done = threading.Event()
 
@@ -421,49 +423,61 @@ class HTSQL:
             if done.wait(self.timeout):
                 return
             fired.set()
-            # cancelJobGroup only kills jobs active at call time; keep
-            # cancelling so jobs submitted after the deadline (e.g.
-            # while the driver was still planning) die too
+            # cancelJobsWithTag only kills jobs active at call time;
+            # keep cancelling so jobs submitted after the deadline
+            # (the next compile-time operator job, the action) die too
             while not done.wait(0.1):
-                sc.cancelJobGroup(group)
+                sc.cancelJobsWithTag(tag)
 
-        sc.setJobGroup(group, f"produce with {self.timeout}s timeout", True)
-        watchdog = threading.Thread(target=_watchdog, daemon=True)
-        watchdog.start()
+        interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(True)
+        threading.Thread(target=_watchdog, daemon=True).start()
+        out = err = None
         try:
-            return [row.asDict(recursive=True) for row in df.collect()]
+            out = action(*self._prepare(query, limit))
         except Exception as exc:
-            if fired.is_set():
-                raise TimeoutError(
-                    f"query exceeded timeout of {self.timeout}s"
-                ) from exc
-            raise
+            if not fired.is_set():
+                raise
+            err = exc
         finally:
             done.set()
-            sc.setJobGroup("", "")
+            sc.removeJobTag(tag)
+            sc.setLocalProperty("spark.job.interruptOnCancel", interrupt)
+        if fired.is_set():
+            raise TimeoutError(f"query exceeded timeout of {self.timeout}s") from err
+        return out
+
+    def df(self, query: str) -> DataFrame:
+        """Compile query text → DataFrame (no action triggered, so no
+        deadline applies)."""
+        return self._prepare(query)[1]
+
+    def produce(self, query: str) -> list[dict]:
+        """Execute and return rows as plain dicts (nested lists/records
+        included), within ``timeout``."""
+        return self._answer(
+            query, lambda _, df: [r.asDict(recursive=True) for r in df.collect()]
+        )
 
     def emit(self, query: str, fmt: str | None = None) -> bytes:
         """Render a query in an output format (reference:
-        src/htsql/core/fmt/emit.py::emit)."""
+        src/htsql/core/fmt/emit.py::emit), within ``timeout``."""
         return self.emit_with_format(query, fmt)[0]
 
     def emit_with_format(
         self, query: str, fmt: str | None = None
     ) -> tuple[bytes, str]:
-        """emit() plus the format actually used — the race-free way
-        for a concurrent server to pick its Content-Type (reading
-        ``last_format`` off the shared engine lets parallel requests
-        clobber each other mid-render)."""
-        node = parse(query)
-        pfmt, node = self._strip_format(node)
-        fmt = pfmt or fmt or "json"  # an explicit /:fmt pipe wins
-        self.last_format = fmt  # kept for backward compatibility
-        df = Compiler(self).compile_query(node)
-        if self.autolimit:
-            df = df.limit(self.autolimit)
+        """emit() plus the format actually used: an explicit ``/:fmt``
+        pipe wins over ``fmt``, then JSON.  A concurrent server picks
+        its Content-Type from the returned format."""
         from . import formats
 
-        return formats.emit(fmt, df), fmt
+        def _render(pfmt, df):
+            used = pfmt or fmt or "json"
+            return formats.emit(used, df), used
+
+        return self._answer(query, _render)
 
     def describe(self, query: str, mode: str = "formatted") -> str:
         """Explain a query's physical plan without executing it
@@ -483,24 +497,25 @@ class HTSQL:
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
     ) -> None:
-        """Write sink: execute a query and persist the result
-        (reference has no sinks — HTTP responses only; this is the
-        Spark-native completion of §3.4).  Nested record/list columns
-        are parquet/json-native; for csv they are flattened to JSON
-        text first.  The interactive ``autolimit`` guard does NOT
-        apply — a write sink must persist the full result, never a
-        silently truncated one."""
-        node = parse(query)
-        _, node = self._strip_format(node)
-        df = Compiler(self).compile_query(node)
-        if format in ("csv", "tsv"):
-            from .formats import _flatten_for_csv
+        """Write sink: execute a query and persist the result within
+        ``timeout`` (reference has no sinks — HTTP responses only;
+        this is the Spark-native completion of §3.4).  Nested
+        record/list columns are parquet/json-native; for csv they are
+        flattened to JSON text first.  The interactive ``autolimit``
+        guard does NOT apply — a write sink must persist the full
+        result, never a silently truncated one."""
 
-            df = _flatten_for_csv(df)
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.format(format).save(path)
+        def _write(fmt, df):
+            if format in ("csv", "tsv"):
+                from .formats import _flatten_for_csv
+
+                df = _flatten_for_csv(df)
+            w = df.write.mode(mode)
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.format(format).save(path)
+
+        self._answer(query, _write, limit=False)
 
     # -- streaming execution mode ---------------------------------------
     def df_stream(self, query: str) -> DataFrame:
@@ -514,14 +529,6 @@ class HTSQL:
         included).  No autolimit (LIMIT is not streaming-legal) and
         no format pipe (formats render the drained batch result —
         run_stream/emit the result instead)."""
-        node = parse(query)
-        fmt, node = self._strip_format(node)
-        if fmt is not None:
-            raise CompileError(
-                f"format pipe /:{fmt} does not apply to a streaming"
-                " execution — drain with run_stream()/store_stream()"
-                " and format the batch result"
-            )
         if self.ordered:
             # ordered mode injects a global orderBy at finalize, which
             # streaming rejects in append mode — and a drained parquet
@@ -534,9 +541,15 @@ class HTSQL:
             )
         self._stream_mode.on = True
         try:
-            df = Compiler(self).compile_query(node)
+            fmt, df = self._prepare(query, limit=False)
         finally:
             self._stream_mode.on = False
+        if fmt is not None:
+            raise CompileError(
+                f"format pipe /:{fmt} does not apply to a streaming"
+                " execution — drain with run_stream()/store_stream()"
+                " and format the batch result"
+            )
         if not df.isStreaming:
             raise CompileError(
                 "query touches no stream-mounted table — declare"

@@ -465,13 +465,13 @@ def apply_cdc(
 ) -> DataFrame:
     """Apply a CDC batch to a snapshot (the MERGE/upsert half of the
     warehouse pattern whose history half is :func:`scd2`): ``changes``
-    carries ``op_col`` rows (any non-``delete_op`` value upserts,
-    ``delete_op`` deletes) ordered by ``ts_col``; per key the LATEST
-    change wins, an upsert's attribute values replace the snapshot
-    row (or insert a new one), a delete removes it.  Returns the new
-    snapshot with exactly ``base``'s columns.  The reference's
-    app-database users hand-roll this as MERGE INTO; here it is an
-    operator with a scale-shaped plan.
+    carries ``op_col`` rows (any non-``delete_op`` value, null
+    included, upserts; ``delete_op`` deletes) ordered by ``ts_col``;
+    per key the LATEST change wins, an upsert's attribute values
+    replace the snapshot row (or insert a new one), a delete removes
+    it.  Returns the new snapshot with exactly ``base``'s columns.
+    The reference's app-database users hand-roll this as MERGE INTO;
+    here it is an operator with a scale-shaped plan.
 
     100 TB posture: the snapshot side is NEVER shuffled.  Last-writer
     resolution aggregates over the (batch-sized) ``changes`` only, and
@@ -483,12 +483,12 @@ def apply_cdc(
     shuffles both sides on ``key``).
 
     Determinism: ties on ``ts_col`` break by ``op_col`` descending
-    ('U' beats 'I' beats 'D' in ASCII), so equal-timestamp batches
-    resolve reproducibly; producers that need a different tie order
-    should encode it in ``ts_col`` (a (ts, seq) epoch works).  Full
-    (ts, op) ties are outside the contract for VALUE purposes (any of
-    the tied rows may win) — exactly the window-shape behavior this
-    aggregation replaced.
+    ('U' beats 'I' beats 'D' in ASCII, a null op loses to all three),
+    so equal-timestamp batches resolve reproducibly; producers that
+    need a different tie order should encode it in ``ts_col`` (a
+    (ts, seq) epoch works).  Full (ts, op) ties are outside the
+    contract for VALUE purposes (any of the tied rows may win) —
+    exactly the window-shape behavior this aggregation replaced.
 
     r14 shape: last-writer resolution is ONE hash aggregation —
     ``max_by`` of the payload ranked by ``struct(ts, op)``
@@ -523,7 +523,7 @@ def apply_cdc(
     winner = F.max_by(payload, F.struct(F.col(ts_col), F.col(op_col)))
     agg = changes.groupBy(*keys).agg(winner.alias("__cdc_w"))
     survivors = (
-        agg.filter(F.col("__cdc_w.o") != delete_op)
+        agg.filter(~F.col("__cdc_w.o").eqNullSafe(delete_op))
         .select(
             *keys,
             *[F.col(f"__cdc_w.v{i}").alias(c) for i, c in enumerate(vcols)],

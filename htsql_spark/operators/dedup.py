@@ -116,19 +116,6 @@ def hashed_shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(sh: Column, num_hashes: int = 32) -> list[Column]:
-    """num_hashes minhash values; hash family =
-    xxhash64(xxhash64(shingle), seed) — one string hash per shingle,
-    per-function derivation over the 8-byte long (same family as
-    :func:`minhash_signature_arr`; stays in codegen)."""
-    return [
-        F.array_min(
-            F.transform(sh, lambda s: F.xxhash64(F.xxhash64(s), F.lit(seed)))
-        )
-        for seed in range(num_hashes)
-    ]
-
-
 def minhash_signature_arr(sh: Column, num_hashes: int = 32) -> Column:
     """The full signature as ONE array column via a single fold over
     the shingles: per shingle an array of num_hashes hashes, merged

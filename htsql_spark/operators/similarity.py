@@ -161,11 +161,6 @@ def _nearest_centroid(vec: Column, cents: list[list[float]]) -> Column:
     return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
-def with_ivf_cells(embs: DataFrame, num_cells: int = 16, seed: int = 7) -> DataFrame:
-    cents = _centroids(64, num_cells, seed)
-    return embs.withColumn("cell", _nearest_centroid(F.col("embedding"), cents))
-
-
 def topk_ivf(
     embs: DataFrame,
     query_id: int,

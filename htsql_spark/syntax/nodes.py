@@ -6,7 +6,7 @@ type.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 class Node:
@@ -138,12 +138,3 @@ class Locate(Node):
 
     base: Node
     identity: list[object]
-
-
-@dataclass
-class Record(Node):
-    """Grouping of several expressions where a single kernel is
-    expected, e.g. `flow ^ {a, b}` — parser re-uses Selection with
-    base=None, compiler treats per context."""
-
-    items: list[Node] = field(default_factory=list)

@@ -10,7 +10,9 @@ format:
 
 Format selection order: an explicit ``/:csv``-style pipe in the query
 wins, then the Accept header, then JSON.  Errors render as plain-text
-4xx bodies (bind/parse errors are the user's, not 500s).
+bodies: a parse/bind error is the user's (400, with its message), a
+passed ``timeout`` is 504, and any other failure is a 500 that names
+only the exception class (no Java traceback leaves the server).
 """
 
 from __future__ import annotations
@@ -49,6 +51,11 @@ def _negotiate(accept_header: str) -> str | None:
     return None
 
 
+def _error(start_response, status: str, text: str) -> list[bytes]:
+    start_response(status, [("Content-Type", "text/plain")])
+    return [text.encode()]
+
+
 class WSGI:
     """``app = WSGI(db); body = app(environ, start_response)``"""
 
@@ -68,18 +75,23 @@ class WSGI:
         qs = unquote(environ.get("QUERY_STRING", ""))
         query = path + ("?" + qs if qs else "")
         if query in ("", "/"):
-            start_response("400 Bad Request", [("Content-Type", "text/plain")])
-            return [b"empty query"]
+            return _error(start_response, "400 Bad Request", "empty query")
         accept = environ.get("HTTP_ACCEPT", "")
         fmt = _negotiate(accept)
         try:
-            # emit lets an explicit /:fmt pipe in the query override;
-            # the used format comes back with the body (reading a
-            # shared engine attribute would race concurrent requests)
+            # an explicit /:fmt pipe in the query overrides the
+            # negotiated format; the used one comes back with the body
             body, used = self.db.emit_with_format(query, fmt)
         except (ParseError, CompileError) as exc:
-            start_response("400 Bad Request", [("Content-Type", "text/plain")])
-            return [str(exc).encode()]
+            return _error(start_response, "400 Bad Request", str(exc))
+        except TimeoutError as exc:
+            return _error(start_response, "504 Gateway Timeout", str(exc))
+        except Exception as exc:
+            return _error(
+                start_response,
+                "500 Internal Server Error",
+                f"query failed: {type(exc).__name__}",
+            )
         ctype = _CONTENT_TYPES.get(used, "application/octet-stream")
         start_response(
             "200 OK",

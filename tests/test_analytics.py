@@ -326,6 +326,17 @@ def test_apply_cdc_update_missing_key_inserts(spark):
     assert _snap(out)[42] == ("up", 4.2)
 
 
+def test_apply_cdc_null_op_upserts(spark):
+    """A winning change whose op is null is not ``delete_op``, so it
+    upserts like any other non-delete op; it must not drop its key."""
+    base = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, val double")
+    chg = spark.createDataFrame(
+        [(1, 11.0, 5, None)], "k long, val double, ts long, op string"
+    )
+    out = analytics.apply_cdc(base, chg, key="k")
+    assert {r.k: r.val for r in out.collect()} == {1: 11.0, 2: 20.0}
+
+
 def test_apply_cdc_validation(spark):
     base = _cdc_base(spark)
     with pytest.raises(ValueError, match="missing columns"):
@@ -363,7 +374,8 @@ def test_apply_cdc_fuzz_vs_sequential_replay(spark):
     by one onto a dict).  Catches last-writer, tie-break, anti-join,
     and column-order drift in one property.  ``ts`` may be null: a
     null ts loses to any non-null ts, and among a key's null-ts
-    changes the op-desc tie-break decides."""
+    changes the op-desc tie-break decides.  ``op`` may be null too: it
+    upserts, and at equal ts it loses to every non-null op."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -371,7 +383,7 @@ def test_apply_cdc_fuzz_vs_sequential_replay(spark):
     change = st.tuples(
         keys,
         st.one_of(st.none(), st.integers(min_value=0, max_value=99)),  # ts
-        st.sampled_from(["U", "I", "D"]),
+        st.sampled_from([None, "U", "I", "D"]),
         st.integers(min_value=0, max_value=999),  # payload
     )
 
@@ -391,11 +403,11 @@ def test_apply_cdc_fuzz_vs_sequential_replay(spark):
         base_rows = [(k, k * 10.0) for k in range(5)]
         expected = dict(base_rows)
         # replay in (ts, op desc) order; later beats earlier, a null
-        # ts sorts before every non-null one, and at equal ts the
-        # op-desc winner is what apply_cdc keeps — so apply only the
-        # LAST (winning) change per key
+        # ts (or op) sorts before every non-null one, and at equal ts
+        # the op-desc winner is what apply_cdc keeps — so apply only
+        # the LAST (winning) change per key
         def rank(ts, op):
-            return (ts is not None, ts or 0, op)
+            return (ts is not None, ts or 0, op is not None, op or "")
 
         winner = {}
         for k, ts, op, val in batch:

@@ -111,18 +111,21 @@ def test_cli_one_shot(spark, capfdbinary):
     assert b"ASIA" in out
 
 
+#: multi-hop navigation over 600k lineitem rows at sf0.1: outlives 50 ms
+_LONG_QUERY = (
+    "/customer{c_name, n := count(orders.lineitem),"
+    " mx := max(orders.lineitem.l_extendedprice)}"
+)
+
+
 def test_timeout_cancels_long_query(spark):
-    """tweak.timeout parity: a statement deadline cancels the Spark
-    job group and surfaces as TimeoutError."""
+    """tweak.timeout parity: a statement deadline cancels the query's
+    tagged Spark jobs and surfaces as TimeoutError."""
     from htsql_spark import HTSQL
 
     db = HTSQL(spark, "/root/testdata/sf0.1", timeout=0.05)
     with pytest.raises(TimeoutError):
-        # multi-hop navigation over 600k lineitem rows outlives 50 ms
-        db.produce(
-            "/customer{c_name, n := count(orders.lineitem),"
-            " mx := max(orders.lineitem.l_extendedprice)}"
-        )
+        db.produce(_LONG_QUERY)
 
 
 def test_timeout_user_error_not_masked(spark):
@@ -131,6 +134,94 @@ def test_timeout_user_error_not_masked(spark):
     db = HTSQL(spark, "/root/testdata/sf0.001", timeout=30)
     with pytest.raises(CompileError):
         db.produce("/nosuchtable")
+
+
+def test_wsgi_timeout_is_504(spark):
+    """The deadline bounds the serve path too: a passed timeout is a
+    504, not a 200 that arrives late or a raised exception."""
+    from htsql_spark import HTSQL
+    from htsql_spark.wsgi import WSGI
+
+    app = WSGI(HTSQL(spark, "/root/testdata/sf0.1", timeout=0.05))
+    status, headers, body = _call(app, _LONG_QUERY)
+    assert status == "504 Gateway Timeout"
+    assert headers["Content-Type"] == "text/plain"
+    assert b"timeout" in body
+
+
+def test_store_timeout(spark, tmp_path):
+    from htsql_spark import HTSQL
+
+    db = HTSQL(spark, "/root/testdata/sf0.1", timeout=0.05)
+    with pytest.raises(TimeoutError):
+        db.store(_LONG_QUERY, str(tmp_path / "out"))
+
+
+def test_timeout_cancels_compile_time_jobs(spark):
+    """cluster() runs its star contraction as Spark jobs while the
+    query compiles (about 2 s of them at sf0.001).  The deadline
+    covers compile, so a cancelled operator job ends the query inside
+    ``compile_query`` and no job outlives the TimeoutError."""
+    import time
+    import traceback
+
+    from htsql_spark import HTSQL
+
+    db = HTSQL(spark, "/root/testdata/sf0.001", timeout=0.2)
+    with pytest.raises(TimeoutError) as info:
+        db.produce("/documents.cluster(){doc_id, cluster_id}")
+    cause = info.value.__cause__
+    assert cause is not None
+    frames = {f.name for f in traceback.extract_tb(cause.__traceback__)}
+    assert "compile_query" in frames
+    tracker = spark.sparkContext.statusTracker()
+    give_up = time.monotonic() + 10
+    while tracker.getActiveJobsIds() and time.monotonic() < give_up:
+        time.sleep(0.05)
+    assert tracker.getActiveJobsIds() == []
+
+
+def test_deadline_leaves_caller_job_group(spark):
+    """The deadline marks its jobs with a job tag: the caller's job
+    group and interrupt flag survive produce/emit, and no tag is left
+    on the thread."""
+    from htsql_spark import HTSQL
+
+    sc = spark.sparkContext
+    db = HTSQL(spark, "/root/testdata/sf0.001", timeout=30)
+    sc.setJobGroup("caller_group", "set by the caller")
+    try:
+        assert len(db.produce("/region")) == 5
+        assert db.emit("/region{r_name}/:csv").startswith(b"r_name\n")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller_group"
+        assert sc.getLocalProperty("spark.job.interruptOnCancel") == "false"
+        assert set(sc.getJobTags()) == set()
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)
+
+
+def test_wsgi_engine_failure_is_sanitized_500():
+    """An engine failure is the server's, not the user's: 500, and the
+    body names only the exception class — no Java traceback."""
+    from htsql_spark.wsgi import WSGI
+
+    class Failing:
+        def emit_with_format(self, query, fmt):
+            raise RuntimeError(
+                "An error occurred while calling o42.collect.\n"
+                "java.lang.IllegalStateException: boom\n"
+                "\tat org.apache.spark.sql.Dataset.collect(Dataset.scala:1)"
+            )
+
+    status, headers, body = _call(WSGI(Failing()), "/region")
+    assert status == "500 Internal Server Error"
+    assert headers["Content-Type"] == "text/plain"
+    assert body == b"query failed: RuntimeError"
 
 
 def test_store_csv_flattens_nested(db, spark, tmp_path):
