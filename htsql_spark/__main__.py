@@ -4,6 +4,7 @@
     python -m htsql_spark /root/testdata/sf0.001              # REPL
     python -m htsql_spark /root/testdata/sf0.001 -c '/region' # one-shot
     python -m htsql_spark DIR -c '/region' -f csv             # format
+    python -m htsql_spark DIR -c '/region' --timeout 30       # deadline
     python -m htsql_spark DIR --serve 8080                    # WSGI server
 
 The REPL reads one query per line and prints the plain-text grid
@@ -24,6 +25,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--reflect", action="store_true",
                     help="reflect the catalog from data files (no catalog.yaml)")
     ap.add_argument("--autolimit", type=int, default=None, help="implicit LIMIT per query")
+    ap.add_argument("--timeout", type=float, default=None, metavar="SECONDS",
+                    help="deadline per query, compile and execution")
     ap.add_argument("--serve", type=int, default=None, metavar="PORT",
                     help="serve the WSGI app on PORT instead of a shell")
     ap.add_argument("--cpus", type=int, default=None)
@@ -34,7 +37,13 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("htsql-spark-ctl", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     catalog = Catalog.from_files(args.data_dir) if args.reflect else None
-    db = HTSQL(spark, args.data_dir, catalog=catalog, autolimit=args.autolimit)
+    try:
+        db = HTSQL(
+            spark, args.data_dir, catalog=catalog,
+            autolimit=args.autolimit, timeout=args.timeout,
+        )
+    except ValueError as exc:  # the engine validates autolimit/timeout
+        ap.error(str(exc))
 
     if args.serve is not None:
         from wsgiref.simple_server import make_server

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import functions as fnlib
-from .ir import CompileError, Flow, FlowV, Scalar, ScopeRef
+from .ir import CompileError, Flow, FlowV, Scalar, ScopeRef, project, quote
 from .syntax import nodes as N
 
 
@@ -141,7 +141,7 @@ class Compiler:
                 flow.explicit_order or getattr(self.engine, "ordered", False)
             ):
                 df = df.orderBy(*order_cols(flow.order))
-            return df.select(*[F.col(c).alias(n) for n, c in out])
+            return project(df, [n for n, _ in out], [c for _, c in out])
         raise CompileError(f"cannot produce output from {type(val).__name__}")
 
     def default_output(self, flow: Flow) -> list[tuple[str, str]]:
@@ -680,9 +680,11 @@ class Compiler:
         flow.df = flow.df.withColumns(kcols)
         base_copy = flow.copy()
         qalias = self.engine.fresh("q")
-        sel = [F.col(c).alias(f"{qalias}__{i}") for i, (_, c) in enumerate(knames)]
-        corr_sel = [F.col(c) for c in base.corr_inner]
-        qdf = flow.df.select(*(corr_sel + sel)).distinct()
+        qdf = project(
+            flow.df,
+            [*base.corr_inner, *(f"{qalias}__{i}" for i in range(len(knames)))],
+            [*base.corr_inner, *(c for _, c in knames)],
+        ).distinct()
         qflow = Flow(self.engine, qdf, qalias, None)
         qflow.kernel = [(n, f"{qalias}__{i}") for i, (n, _) in enumerate(knames)]
         qflow.base_flow = base_copy
@@ -1073,14 +1075,11 @@ class Compiler:
             cur = (
                 parent.join(cur, cond, "inner")
                 .groupBy(*[parent[c] for c in up.target_cols])
-                .agg(*[fn(F.col(p)).alias(p) for fn, p in merges])
+                .agg(*[fn(p).alias(p) for fn, p in merges])
             )
         # one left join to the outer flow on the first link
         tmp = [self.engine.fresh("__j") for _ in links[0].target_cols]
-        cur = cur.select(
-            *[F.col(k).alias(a) for k, a in zip(links[0].target_cols, tmp)],
-            *[F.col(p) for p in pnames],
-        )
+        cur = project(cur, [*tmp, *pnames], [*links[0].target_cols, *pnames])
         cond = None
         for oc, a in zip(links[0].origin_cols, tmp):
             eq = F.col(f"{scope.alias}__{oc}") == F.col(a)
@@ -1108,9 +1107,7 @@ class Compiler:
         sub = v.flow
         grouped = sub.df.groupBy(*[F.col(c) for c in v.corr_inner]).agg(*aggs)
         rename = dict(zip(v.corr_inner, [c for _, c in qflow.kernel]))
-        qflow.df = grouped.select(
-            *[F.col(c).alias(rename.get(c, c)) for c in grouped.columns]
-        )
+        qflow.df = project(grouped, [rename.get(c, c) for c in grouped.columns])
 
     def _join_grouped(self, outer: Flow, v: FlowV, aggs: list[Column]) -> None:
         """groupBy correlation keys + LEFT JOIN back (shared by single
@@ -1123,10 +1120,7 @@ class Compiler:
         adf = sub.df.groupBy(*[F.col(c) for c in v.corr_inner]).agg(*aggs)
         tmp = [self.engine.fresh("__j") for _ in v.corr_inner]
         keep = [f for f in adf.columns if f not in v.corr_inner]
-        adf = adf.select(
-            *[F.col(k).alias(t) for k, t in zip(v.corr_inner, tmp)],
-            *[F.col(c) for c in keep],
-        )
+        adf = project(adf, [*tmp, *keep], [*v.corr_inner, *keep])
         cond = None
         for o, t in zip(v.corr_outer, tmp):
             eq = F.col(o).eqNullSafe(F.col(t)) if v.null_safe else F.col(o) == F.col(t)
@@ -1160,8 +1154,8 @@ class Compiler:
             outer.df = outer.df.crossJoin(F.broadcast(adf))
         else:
             tmp = [self.engine.fresh("__j") for _ in v.corr_inner]
-            adf = sub.df.select(
-                *[F.col(k).alias(t) for k, t in zip(v.corr_inner, tmp)], v.value.alias(vname)
+            adf = project(
+                sub.df.select(*v.corr_inner, v.value.alias(vname)), [*tmp, vname]
             )
             cond = None
             for o, t in zip(v.corr_outer, tmp):
@@ -1182,17 +1176,17 @@ class Compiler:
             sub.output = [(v.hint, tmp)]
         out = sub.output or self.default_output(sub)
         okeys = [(c, asc) for c, asc in sub.order]
-        fields = [F.col(c).alias(n) for n, c in out]
-        ofields = [F.col(c).alias(f"__o{i}") for i, (c, _) in enumerate(okeys)]
-        payload = F.struct(*(ofields + fields))
+        fields = [f"{quote(c)} AS `__o{i}`" for i, (c, _) in enumerate(okeys)]
+        fields += [f"{quote(c)} AS {quote(n)}" for n, c in out]
+        payload = F.expr(f"struct({', '.join(fields)})")
         aname = self.engine.fresh("__arr")
         tmpk = [self.engine.fresh("__j") for _ in v.corr_inner]
-        gdf = (
-            sub.df.groupBy(*[F.col(c) for c in v.corr_inner])
-            .agg(F.collect_list(payload).alias(aname))
-            .select(
-                *[F.col(k).alias(t) for k, t in zip(v.corr_inner, tmpk)], F.col(aname)
-            )
+        gdf = project(
+            sub.df.groupBy(*[F.col(c) for c in v.corr_inner]).agg(
+                F.collect_list(payload).alias(aname)
+            ),
+            [*tmpk, aname],
+            [*v.corr_inner, aname],
         )
         outer = scope.flow
         cond = None
@@ -1258,7 +1252,7 @@ class Compiler:
             mdf = mdf.limit(gw.autolimit)
         tdef = TableDef(name=f"gateway_{name}", pk=(), columns=tuple(mdf.columns))
         alias = self.engine.fresh("g")
-        df = mdf.select(*[F.col(c).alias(f"{alias}__{c}") for c in mdf.columns])
+        df = project(mdf, [f"{alias}__{c}" for c in tdef.columns])
         flow = Flow(self.engine, df, alias, tdef)
         flow.order = []
         return FlowV(flow, [], [], hint=f"{name}(…)")
@@ -1279,7 +1273,7 @@ class Compiler:
         ]
         tdef = TableDef(name=f"meta_{kind}", pk=pk, columns=tuple(mdf.columns))
         alias = self.engine.fresh("m")
-        df = mdf.select(*[F.col(c).alias(f"{alias}__{c}") for c in mdf.columns])
+        df = project(mdf, [f"{alias}__{c}" for c in tdef.columns])
         flow = Flow(self.engine, df, alias, tdef)
         flow.order = [(f"{alias}__{c}", True) for c in pk]
         return FlowV(flow, [], [], hint=f"meta({kind})")
@@ -2069,8 +2063,8 @@ def _fm_dup_spans(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     prefix = cc.engine.fresh("__sp") + "_"
     stats = duplicated_spans(narrow)
     names = ["n_windows", "dup_windows", "n_spans", "dup_chars", "dup_frac"]
-    stats = stats.select(
-        F.col("doc_id"), *[F.col(n).alias(f"{prefix}{n}") for n in names]
+    stats = project(
+        stats, ["doc_id", *(prefix + n for n in names)], ["doc_id", *names]
     )
     _fm_join_back(cc, flow, key, stats)
     _fm_register_extra(flow, [f"{prefix}{n}" for n in names], prefix, "spans_")
@@ -2101,8 +2095,10 @@ def _fm_pack(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
     prefix = cc.engine.fresh("__pk") + "_"
     names = ["shard", "seq_id", "offset", "take"]
-    spans = pack_sequences(narrow, budget=budget).select(
-        F.col("doc_id"), *[F.col(n).alias(f"{prefix}{n}") for n in names]
+    spans = project(
+        pack_sequences(narrow, budget=budget),
+        ["doc_id", *(prefix + n for n in names)],
+        ["doc_id", *names],
     )
     _fm_join_back(cc, flow, key, spans)
     _fm_register_extra(flow, [f"{prefix}{n}" for n in names], prefix, "pack_")
@@ -2583,12 +2579,7 @@ def _fm_reshape(cc: Compiler, v: FlowV, method: str, res, names: list[str]) -> F
         )
     prefix = cc.engine.fresh("__" + method[:3]) + "_"
     cols = {n: prefix + n for n in names}
-    nf = Flow(
-        cc.engine,
-        res.select(*[F.col(n).alias(cols[n]) for n in names]),
-        "",
-        None,
-    )
+    nf = Flow(cc.engine, project(res, [cols[n] for n in names], names), "", None)
     nf.kernel = [(n, cols[n]) for n in names]
     # ordered-parity: like a quotient, the reshaped relation's implicit
     # order is its kernel (materialized only under engine.ordered or an
@@ -2618,9 +2609,7 @@ def _fm_funnel(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
 
     steps = [_fm_str_lit(args, i, "funnel") for i in range(len(args))]
     cols = _fm_events_cols(v, "funnel", ("ts", "user_id", "event_type"))
-    narrow = v.flow.df.select(
-        *[F.col(c).alias(n) for n, c in cols.items()]
-    )
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     return _fm_reshape(
         cc, v, "funnel", funnel(narrow, steps), ["step", "event_type", "users"]
     )
@@ -2638,7 +2627,7 @@ def _fm_retention(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     from .operators.analytics import retention
 
     cols = _fm_events_cols(v, "retention", ("ts", "user_id"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     return _fm_reshape(
         cc, v, "retention", retention(narrow),
         ["cohort_week", "week_offset", "users"],
@@ -2659,7 +2648,7 @@ def _fm_transitions(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     cols = _fm_events_cols(
         v, "transitions", ("ts", "user_id", "event_type", "event_id")
     )
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     return _fm_reshape(
         cc, v, "transitions", transitions(narrow),
         ["event_type", "next_type", "n"],
@@ -2698,7 +2687,7 @@ def _fm_tumbling(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     from .streaming.events import tumbling_counts
 
     cols = _fm_events_cols(v, "tumbling", ("ts", "event_type", "value"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     return _fm_reshape(
         cc, v, "tumbling", tumbling_counts(narrow, window=window),
         ["w_start", "w_end", "event_type", "n", "total"],
@@ -2723,7 +2712,7 @@ def _fm_sliding(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     from .streaming.events import sliding_event_avg
 
     cols = _fm_events_cols(v, "sliding", ("ts", "value"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     return _fm_reshape(
         cc, v, "sliding", sliding_event_avg(narrow, window=window, slide=slide),
         ["w_start", "avg_value", "n"],
@@ -2743,7 +2732,7 @@ def _fm_sessions(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     from .streaming.events import session_counts
 
     cols = _fm_events_cols(v, "sessions", ("ts", "user_id"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     return _fm_reshape(
         cc, v, "sessions", session_counts(narrow, gap=gap),
         ["user_id", "s_start", "s_end", "n"],
@@ -2770,7 +2759,7 @@ def _fm_anomalies(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     cols = _fm_events_cols(
         v, "anomalies", ("ts", "event_id", "event_type", "value")
     )
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
+    narrow = project(v.flow.df, list(cols), list(cols.values()))
     if narrow.isStreaming:
         # streaming execution mode (engine.df_stream): the unbounded-
         # preceding window of the batch twin is not streaming-legal,
@@ -3480,6 +3469,6 @@ def _struct_comparator(okeys: list[tuple[str, bool]]):
 
 def _empty_array_type(df: DataFrame, out: list[tuple[str, str]]) -> str:
     """DDL string for the empty-array fallback of a nested segment."""
-    sub = df.select(*[F.col(c).alias(n) for n, c in out])
-    fields = ", ".join(f"`{f.name}`: {f.dataType.simpleString()}" for f in sub.schema.fields)
+    sub = project(df, [n for n, _ in out], [c for _, c in out])
+    fields = ", ".join(f"{quote(f.name)}: {f.dataType.simpleString()}" for f in sub.schema.fields)
     return f"array<struct<{fields}>>"

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .compile import Compiler
-from .ir import CompileError, Flow
+from .ir import CompileError, Flow, project
 from .parquet_ts import convert_nano_cols, nano_timestamp_fields
 from .syntax import parse
 from .syntax import nodes as N
@@ -245,7 +245,7 @@ class HTSQL:
 
     def scan_df(self, name: str, alias: str) -> DataFrame:
         df = self.table(name)
-        return df.select(*[F.col(c).alias(f"{alias}__{c}") for c in df.columns])
+        return project(df, [f"{alias}__{c}" for c in df.columns])
 
     def scan_flow(self, name: str) -> Flow:
         alias = self.fresh("t")
@@ -930,7 +930,11 @@ def _append_epoch(bdf: DataFrame, path: str, epoch_id: int) -> None:
 def get_spark(app_name: str = "htsql-spark", cpus: int | None = None) -> SparkSession:
     """Local session tuned per the 100 TB posture (AQE on, sane
     shuffle partitioning); on a real cluster only master/memory
-    change."""
+    change.  PySpark's DataFrame debugging is off: its Python
+    call-site capture costs about ten py4j round-trips on every
+    ``functions``/``Column`` call, most of the cost of building a
+    query's DataFrame, and the engine reports its own ``ParseError`` /
+    ``CompileError``."""
     import os
 
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -946,6 +950,7 @@ def get_spark(app_name: str = "htsql-spark", cpus: int | None = None) -> SparkSe
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # deployment-specific overrides without code edits (e.g. cluster
     # memory/codec tuning, A/B of planner flags):

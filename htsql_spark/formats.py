@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .ir import quote
+
 
 def emit(fmt: str, df: DataFrame) -> bytes:
     fmt = fmt.lower()
@@ -45,12 +47,7 @@ def emit_json(df: DataFrame, meta: bool = False) -> bytes:
         r.j
         for r in df.select(
             F.to_json(
-                F.struct(
-                    *[
-                        F.col("`" + c.replace("`", "``") + "`")
-                        for c in df.columns
-                    ]
-                ),
+                F.struct(*[F.col(quote(c)) for c in df.columns]),
                 {"ignoreNullFields": "false"},
             ).alias("j")
         ).collect()
@@ -63,16 +60,26 @@ def emit_json(df: DataFrame, meta: bool = False) -> bytes:
 
 
 def _flatten_for_csv(df: DataFrame) -> DataFrame:
-    cols = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType)):
-            c = F.to_json(c)
-        cols.append(c.alias(f.name))
-    return df.select(*cols)
+    """Nested (array/struct/map) columns as JSON text; a flat result
+    is returned as is, without a re-projection."""
+    nested = (T.ArrayType, T.StructType, T.MapType)
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, nested) for f in fields):
+        return df
+    return df.selectExpr(
+        *(
+            f"to_json({quote(f.name)}) AS {quote(f.name)}"
+            if isinstance(f.dataType, nested)
+            else quote(f.name)
+            for f in fields
+        )
+    )
 
 
 def emit_csv(df: DataFrame, sep: str = ",") -> bytes:
+    """One ``collect()``: one job, like ``emit_json`` (the body is
+    buffered whole either way; ``toLocalIterator`` runs a job per
+    partition)."""
     import csv as _csv
     import io
 
@@ -80,7 +87,7 @@ def emit_csv(df: DataFrame, sep: str = ",") -> bytes:
     buf = io.StringIO()
     w = _csv.writer(buf, delimiter=sep, lineterminator="\n")
     w.writerow(flat.columns)
-    for row in flat.toLocalIterator():
+    for row in flat.collect():
         w.writerow(["" if v is None else v for v in row])
     return buf.getvalue().encode()
 

@@ -21,7 +21,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ir import CompileError, FlowV, Scalar, ScopeRef
+from .ir import CompileError, FlowV, Scalar, ScopeRef, quote
 from .syntax import nodes as N
 
 
@@ -398,11 +398,11 @@ def _fn_id(cc, ctx, scope, args):
     src/htsql/core/domain.py::IdentityDomain)."""
     if scope.table is None:
         raise CompileError("id() needs a table scope")
-    idc = [
-        F.col(scope.flow.scope_col(c, scope.alias)).alias(c)
+    idc = ", ".join(
+        f"{quote(scope.flow.scope_col(c, scope.alias))} AS {quote(c)}"
         for c in scope.table.identity_cols
-    ]
-    return Scalar(F.struct(*idc), "id")
+    )
+    return Scalar(F.expr(f"struct({idc})"), "id")
 
 
 def _fn_as(cc, ctx, scope, args):

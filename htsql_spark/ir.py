@@ -40,6 +40,30 @@ class CompileError(ValueError):
     …); mirrors the reference's bind errors."""
 
 
+def quote(name: str) -> str:
+    """A column name as a SQL identifier: backtick-quoted, inner
+    backticks doubled, so '2.5', 'a.b' or 'x`y' stay one name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def project(df: "DataFrame", names, cols=None) -> "DataFrame":
+    """Project ``df`` onto ``cols`` renamed to ``names`` in one py4j
+    call.  Without ``cols`` every column is renamed in place
+    (``toDF``, which renames by attribute, not by name); with them,
+    one ``selectExpr`` keeps just those columns, in that order (a
+    column kept under its own name is not aliased).  Catalyst resolves
+    both to the plan of ``select(F.col(c).alias(n), …)``, which costs
+    at least two round-trips per column."""
+    if cols is None:
+        return df.toDF(*names)
+    return df.selectExpr(
+        *(
+            quote(c) if c == n else f"{quote(c)} AS {quote(n)}"
+            for n, c in zip(names, cols)
+        )
+    )
+
+
 class Flow:
     """A row set under construction."""
 

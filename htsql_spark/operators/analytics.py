@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ir import quote
+
 
 def funnel(
     events: DataFrame,
@@ -516,17 +518,15 @@ def apply_cdc(
     # positional field aliases: base columns may legally collide with
     # ts_col/op_col or each other's names inside one struct
     vcols = [c for c in base.columns if c not in keys]
-    payload = F.struct(
-        *[F.col(c).alias(f"v{i}") for i, c in enumerate(vcols)],
-        F.col(op_col).alias("o"),
-    )
+    fields = [f"{quote(c)} AS v{i}" for i, c in enumerate(vcols)]
+    payload = F.expr(f"struct({', '.join(fields)}, {quote(op_col)} AS o)")
     winner = F.max_by(payload, F.struct(F.col(ts_col), F.col(op_col)))
     agg = changes.groupBy(*keys).agg(winner.alias("__cdc_w"))
     survivors = (
         agg.filter(~F.col("__cdc_w.o").eqNullSafe(delete_op))
-        .select(
-            *keys,
-            *[F.col(f"__cdc_w.v{i}").alias(c) for i, c in enumerate(vcols)],
+        .selectExpr(
+            *map(quote, keys),
+            *(f"__cdc_w.v{i} AS {quote(c)}" for i, c in enumerate(vcols)),
         )
         .select(*base.columns)
     )

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..ir import quote
+
 
 def asof_join(
     left: DataFrame,
@@ -141,10 +143,13 @@ def asof_join(
             .otherwise(F.col("__mb")),  # ties prefer backward
         )
     u = u.filter(F.col("__side") == 1)
-    out = [F.col(f"__lrow.{c}").alias(c) for c in left.columns]
-    out += [F.col("__match.__rts").alias(f"r_{right_ts}")]
-    out += [F.col(f"__match.{c}").alias(c if c not in left.columns else f"r_{c}") for c in right_cols]
-    return u.select(*out)
+    out = [f"__lrow.{quote(c)} AS {quote(c)}" for c in left.columns]
+    out += [f"__match.__rts AS {quote('r_' + right_ts)}"]
+    out += [
+        f"__match.{quote(c)} AS {quote(c if c not in left.columns else 'r_' + c)}"
+        for c in right_cols
+    ]
+    return u.selectExpr(*out)
 
 
 def range_join(

@@ -111,6 +111,19 @@ def test_cli_one_shot(spark, capfdbinary):
     assert b"ASIA" in out
 
 
+def test_cli_bad_timeout_exits_with_engine_message(spark, capsys):
+    """``--timeout`` reaches the engine, and a value the engine rejects
+    ends the CLI with a usage error carrying the engine's message."""
+    from htsql_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["/root/testdata/sf0.001", "-c", "/region", "--timeout", "0", "--cpus", "8"])
+    assert exc.value.code != 0
+    assert "timeout must be a positive number of seconds or None, got 0.0" in (
+        capsys.readouterr().err
+    )
+
+
 #: multi-hop navigation over 600k lineitem rows at sf0.1: outlives 50 ms
 _LONG_QUERY = (
     "/customer{c_name, n := count(orders.lineitem),"
