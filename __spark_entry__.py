@@ -4412,9 +4412,9 @@ FROM q WHERE words >= 50
 SELECT s_name AS sname FROM supplier WHERE EXISTS (
   SELECT 1 FROM partsupp JOIN part ON p_partkey = ps_partkey
   WHERE ps_suppkey = s_suppkey AND contains(lower(p_name), 'wid')
-    AND ps_availqty > 100 * coalesce(
-      (SELECT sum(l_quantity) FROM lineitem
-       WHERE l_partkey = ps_partkey AND year(l_shipdate) = 1996), 0))
+    AND ps_availqty > 100 * (
+      SELECT sum(l_quantity) FROM lineitem
+      WHERE l_partkey = ps_partkey AND year(l_shipdate) = 1996))
 """,
         "tpch_q11": _PARTSUPP_CTE + """,
 filt AS (

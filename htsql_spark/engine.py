@@ -601,12 +601,14 @@ class HTSQL:
           at drain end the snapshot equals the complete-mode answer
           while each epoch pays O(changed groups) in BOTH compute and
           I/O: the snapshot is hash-bucketed on ``keys`` into
-          ``buckets`` hive directories (default 32; size so one
-          bucket is a few hundred MB at the target scale) and an
-          epoch rewrites only the buckets containing touched keys —
-          untouched buckets' files are not read, not listed, and not
-          rewritten.  Pass ``buckets=0`` for the legacy flat layout
-          (full rewrite per epoch).  The on-disk dataset carries an
+          ``buckets`` hive directories (default: an existing
+          snapshot's N, else 32; size so one bucket is a few hundred
+          MB at the target scale) and an epoch rewrites only the
+          buckets containing touched keys — untouched buckets' files
+          are not read, not listed, and not rewritten.  Each epoch
+          is pinned once and planned by one aggregation job.  An
+          older engine's flat snapshot is migrated by the first
+          epoch.  The on-disk dataset carries an
           ``htsql__bucket`` partition column (reserved name); read it
           back via ``streaming.snapshot.read_snapshot`` (run_stream
           does).  ``keys`` must be the FULL set of grouping
@@ -707,46 +709,20 @@ class HTSQL:
                     release_dataset_lock(sess, path)
 
         elif output_mode == "update":
-            n_buckets = 32 if buckets is None else int(buckets)
 
             def _sink(bdf: DataFrame, epoch_id: int) -> None:
                 from .streaming.snapshot import apply_cdc_batch
 
-                batch = bdf.withColumn(
-                    "__cdc_op", F.lit("U")
-                ).withColumn("__cdc_ts", F.lit(int(epoch_id))).localCheckpoint(
-                    eager=True
-                )
-                # keys must uniquely identify the aggregate's groups:
-                # update mode emits ONE row per changed group per
-                # epoch, so duplicate keys within a batch mean the
-                # keys under-identify the grouping and the MERGE
-                # would keep one arbitrary row per key — fail loudly
-                # instead of converging to a silently wrong snapshot
-                # (round-12 review).  The batch is localCheckpointed
-                # above so this extra pass doesn't recompute the
-                # micro-batch.
-                # the aggregate is aliased to a reserved name: a
-                # grouping key literally named 'count' would make a
-                # bare F.col("count") ambiguous and fail the epoch
-                # with an unrelated AnalysisException (round-12
-                # advice)
-                dup = (
-                    batch.groupBy(*keys)
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                )
-                if dup.limit(1).count():
-                    raise ValueError(
-                        f"update-mode keys {list(keys)} do not uniquely"
-                        " identify the query's groups (an epoch emitted"
-                        " multiple rows per key) — pass the FULL set of"
-                        " grouping attributes"
-                    )
+                # every row shares one (epoch, 'U'), so apply_cdc_batch's
+                # repeated-(key, ts, op) rejection is exactly "keys
+                # under-identify the groups"
                 apply_cdc_batch(
-                    bdf.sparkSession, batch, path, key=list(keys),
-                    ts_col="__cdc_ts", op_col="__cdc_op",
-                    buckets=n_buckets or None,
+                    bdf.sparkSession,
+                    bdf.withColumns(
+                        {"__cdc_op": F.lit("U"), "__cdc_ts": F.lit(int(epoch_id))}
+                    ),
+                    path, key=list(keys), ts_col="__cdc_ts",
+                    op_col="__cdc_op", buckets=buckets,
                 )
 
         else:  # append

@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .ir import quote
@@ -40,16 +39,10 @@ def emit_json(df: DataFrame, meta: bool = False) -> bytes:
     # carries the full key set (toJSON()'s default DROPS null-valued
     # fields, giving rows inconsistent shapes and a meta schema that
     # lists fields absent from the data)
-    # backtick-quote names: an unaliased literal can yield a column
-    # named '2.5' or 'a.b', which bare F.col() would parse as
-    # struct-field access and fail with UNRESOLVED_COLUMN
     rows = [
         r.j
-        for r in df.select(
-            F.to_json(
-                F.struct(*[F.col(quote(c)) for c in df.columns]),
-                {"ignoreNullFields": "false"},
-            ).alias("j")
+        for r in df.selectExpr(
+            "to_json(struct(*), map('ignoreNullFields', 'false')) AS j"
         ).collect()
     ]
     body = ",\n    ".join(rows)

@@ -6,29 +6,27 @@ and rename-swap discipline.
 
 Per micro-batch the snapshot side is NEVER shuffled (apply_cdc's
 broadcast key-set anti join), so the loop's steady-state COMPUTE is
-O(batch) + one map-side pass.  The I/O side has two layouts:
-
-* **flat** (``buckets=None``, the historical default for one-shot
-  MERGEs): the whole snapshot is rewritten each batch — fine for
-  snapshots that fit a handful of files, O(all groups) I/O per batch.
-* **hash-bucketed** (``buckets=N``): the snapshot lives as hive-style
-  ``htsql__bucket=K/`` directories keyed by ``pmod(hash(key), N)``,
-  and each batch rewrites ONLY the buckets containing touched keys —
-  per-epoch I/O is O(changed groups × snapshot/N), the same
-  file-level pruning Delta/Iceberg MERGE does, built from stock Spark
-  ops.  A batch touching most buckets (>= ``full_rewrite_fraction``)
-  falls back to one full rewrite, which is cheaper than swapping
-  every bucket individually.  Bucket count is recorded in a sibling
-  ``{path}__buckets`` marker so every epoch (and every restart)
-  agrees on the layout; readers of the root see an extra
-  ``htsql__bucket`` column — :func:`read_snapshot` strips it.
+O(batch) + one map-side pass.  The snapshot has one layout: it lives
+as hive-style ``htsql__bucket=K/`` directories keyed by
+``pmod(hash(key), N)``, and each batch rewrites ONLY the buckets
+containing touched keys — per-epoch I/O is O(changed groups ×
+snapshot/N), the same file-level pruning Delta/Iceberg MERGE does,
+built from stock Spark ops.  A batch touching most buckets (at least
+:data:`FULL_REWRITE_FRACTION` of them) falls back to one full
+rewrite, which is cheaper than swapping every bucket individually.
+Bucket count and key are recorded in a sibling ``{path}__buckets``
+marker so every epoch (and every restart) agrees on the layout;
+readers of the root see an extra ``htsql__bucket`` column —
+:func:`read_snapshot` strips it.  A snapshot without a marker (an
+older engine's flat parquet dataset) is rewritten bucketed by its
+next batch.
 
 Delivery semantics: offsets are exactly-once via the streaming
 checkpoint, and the batch body is IDEMPOTENT — re-applying the same
 change batch to an already-updated snapshot is a fixed point (upserts
 rewrite the same values, deletes find nothing) — so crash-retry
-re-runs converge.  Flat-layout swaps are the two-rename + backup
-pattern of ``layout.compact_dataset``; bucketed swaps run the same
+re-runs converge.  Full rewrites are the two-rename + backup pattern
+of ``layout.compact_dataset``; bucket swaps run the same
 checked-rename discipline PER BUCKET with dot-prefixed backup dirs
 (``.bck-K`` — hidden from Spark's file listing, so a reader mid-swap
 sees the old bucket, the new bucket, or a momentary retryable miss,
@@ -62,6 +60,13 @@ BUCKET_COL = "htsql__bucket"
 #: hidden per-bucket backup prefix used during a bucket swap; the
 #: leading dot keeps mid-swap state invisible to concurrent readers.
 _BUCKET_BACKUP = ".bck-"
+
+#: bucket count of a snapshot whose first batch names none
+DEFAULT_BUCKETS = 32
+
+#: a batch touching at least this share of the buckets is applied as
+#: one full rewrite instead of one swap per bucket
+FULL_REWRITE_FRACTION = 0.5
 
 
 def bucket_expr(keys: list[str], n_buckets: int) -> Column:
@@ -167,9 +172,7 @@ def apply_cdc_batch(
     ts_col: str = "ts",
     op_col: str = "op",
     delete_op: str = "D",
-    snapshot_files: int = 8,
     buckets: int | None = None,
-    full_rewrite_fraction: float = 0.5,
 ) -> None:
     """Fold one CDC batch into the snapshot at ``snapshot_path``
     under the dataset lock (shared with ``compact_dataset`` and the
@@ -178,25 +181,42 @@ def apply_cdc_batch(
     non-meta columns (first batch = initial load).  Usable directly
     for one-shot batch MERGEs too.
 
-    ``buckets=N`` selects the hash-bucketed layout (see the module
-    docstring): per-epoch I/O proportional to the buckets containing
-    touched keys, not the whole snapshot.  Size N so one bucket is a
-    few hundred MB at the target scale — a 100 TB snapshot wants
-    thousands of buckets, a test snapshot a handful.  Once a snapshot
-    is bucketed its marker pins the layout: later calls may omit
-    ``buckets`` (the marker supplies it) but may not change N or the
-    key set.  A bucketed call on an EXISTING flat snapshot migrates
-    it (one full rewrite, then scoped forever after)."""
+    The snapshot is hash-bucketed on ``key`` into ``buckets`` hive
+    directories (see the module docstring): per-epoch I/O is
+    proportional to the buckets containing touched keys, not the
+    whole snapshot.  Size N so one bucket is a few hundred MB at the
+    target scale — a 100 TB snapshot wants thousands of buckets, a
+    test snapshot a handful.  ``buckets=None`` means the marker's N
+    for an existing snapshot, else :data:`DEFAULT_BUCKETS`.  Once a
+    snapshot is bucketed its marker pins the layout: later calls may
+    omit ``buckets`` but may not change N or the key set.  A flat
+    snapshot on disk (no marker) is migrated by one full rewrite,
+    then scoped forever after.
+
+    The batch is pinned once (eager ``localCheckpoint``) and planned
+    by one aggregation job, which yields the touched buckets and
+    whether any (``key``, ``ts_col``, ``op_col``) repeats.  A repeat
+    raises ``ValueError``: which of two identical-(ts, op) changes
+    wins is outside ``apply_cdc``'s determinism contract."""
     keys = [key] if isinstance(key, str) else list(key)
+    if BUCKET_COL in batch.columns:
+        raise ValueError(
+            f"apply_cdc_batch: change batch may not carry the reserved"
+            f" column {BUCKET_COL!r}"
+        )
+    if buckets is not None and buckets < 1:
+        raise ValueError(
+            f"apply_cdc_batch: buckets must be >= 1, got {buckets}"
+        )
     acquire_dataset_lock(
         spark, snapshot_path, owner=f"apply_cdc_batch({snapshot_path})"
     )
     try:
         jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        src = jvm.org.apache.hadoop.fs.Path(snapshot_path)
-        fs = src.getFileSystem(conf)
-        backup = jvm.org.apache.hadoop.fs.Path(snapshot_path + "__presnap")
+        HPath = jvm.org.apache.hadoop.fs.Path
+        src = HPath(snapshot_path)
+        fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
+        backup = HPath(snapshot_path + "__presnap")
         if not fs.exists(src) and fs.exists(backup):
             # crashed between the two swap renames: the backup IS the
             # snapshot — restore before anything else.  CHECKED
@@ -209,7 +229,9 @@ def apply_cdc_batch(
                     f" {snapshot_path}) failed — snapshot not applied"
                 )
         meta = _read_bucket_meta(fs, jvm, snapshot_path)
-        if meta is not None:
+        if meta is None:
+            n = DEFAULT_BUCKETS if buckets is None else int(buckets)
+        else:
             if buckets is not None and buckets != meta["n"]:
                 raise ValueError(
                     f"apply_cdc_batch: snapshot {snapshot_path} is"
@@ -223,157 +245,93 @@ def apply_cdc_batch(
                     f" bucketed by key {meta['key']} but key {keys}"
                     " was passed — bucket assignment would diverge"
                 )
-            buckets = meta["n"]
-        if buckets is not None:
-            _apply_bucketed(
-                spark, batch, snapshot_path, keys, ts_col, op_col,
-                delete_op, int(buckets), full_rewrite_fraction,
-                bootstrap_marker=meta is None,
+            n = meta["n"]
+        _recover_buckets(fs, jvm, snapshot_path)
+        # the batch feeds the planning job, the CDC fold and the
+        # write — pin it so an expensive upstream plan (a stream's
+        # micro-batch) runs once
+        batch = batch.localCheckpoint(eager=True)
+        stats = (
+            batch.groupBy(*keys, ts_col, op_col)
+            .agg(F.count(F.lit(1)).alias("__cdc_n"))
+            .groupBy(bucket_expr(keys, n).alias("__cdc_b"))
+            .agg(F.max("__cdc_n").alias("__cdc_n"))
+            .collect()
+        )
+        if any(r["__cdc_n"] > 1 for r in stats):
+            raise ValueError(
+                f"apply_cdc_batch: key {keys} with ({ts_col}, {op_col})"
+                " does not uniquely identify the batch's changes — two"
+                " rows of one key share a timestamp and op, so which"
+                " wins is undefined (an update-mode sink's keys must be"
+                " the FULL set of grouping attributes)"
             )
+        touched = sorted(r["__cdc_b"] for r in stats)
+        if not touched:
             return
-        base_cols = [c for c in batch.columns if c not in (ts_col, op_col)]
-        if fs.exists(src):
-            base = spark.read.parquet(snapshot_path)
+        snapshot_exists = fs.exists(src)
+        # no marker yet = bootstrap (no dataset) or MIGRATION (flat
+        # layout on disk): both need a full bucketed rewrite — the
+        # scoped path would graft bucket dirs next to flat files and
+        # lose the untouched rows from reads of the mixed root
+        full = (
+            meta is None
+            or not snapshot_exists
+            or len(touched) >= max(1, int(n * FULL_REWRITE_FRACTION))
+        )
+        root = snapshot_path.rstrip("/")
+        if full:
+            reads = [snapshot_path] if snapshot_exists else []
+            staging = snapshot_path + "__staging"
         else:
-            base = spark.createDataFrame(
-                [], batch.select(*base_cols).schema
-            )
-        new_snap = apply_cdc(
-            base.select(*base_cols),
-            batch,
-            key=keys,
-            ts_col=ts_col,
-            op_col=op_col,
-            delete_op=delete_op,
-        )
-        staging = snapshot_path + "__staging"
-        # mode('overwrite') discards a crashed attempt's leftover
-        # staging; the swap itself is layout.replace_dataset — the
-        # checked two-rename + backup discipline (a failed rename
-        # restores the snapshot and raises; an unchecked false would
-        # leave the path empty and the next batch's bootstrap would
-        # silently reinitialize from one change batch)
-        (
-            new_snap.repartition(snapshot_files)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        replace_dataset(
-            spark, staging, snapshot_path, backup_suffix="__presnap"
-        )
-    finally:
-        release_dataset_lock(spark, snapshot_path)
-
-
-def _apply_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    snapshot_path: str,
-    keys: list[str],
-    ts_col: str,
-    op_col: str,
-    delete_op: str,
-    n: int,
-    full_rewrite_fraction: float,
-    bootstrap_marker: bool,
-) -> None:
-    """The bucketed MERGE body (lock already held).  Reads ONLY the
-    touched buckets' directories (explicit paths — no listing of the
-    untouched ones beyond the O(n_buckets) recovery glob), applies
-    the CDC fold to that slice, writes the new bucket contents to an
-    external staging dir partitioned by bucket id, and dir-renames
-    each touched bucket into place."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    src = HPath(snapshot_path)
-    fs = src.getFileSystem(conf)
-    if BUCKET_COL in batch.columns:
-        raise ValueError(
-            f"apply_cdc_batch: change batch may not carry the reserved"
-            f" column {BUCKET_COL!r}"
-        )
-    _recover_buckets(fs, jvm, snapshot_path)
-    # the batch feeds three jobs (touched-bucket scan, CDC fold,
-    # write) — pin it so an expensive upstream plan runs once
-    batch = batch.localCheckpoint(eager=True)
-    base_cols = [c for c in batch.columns if c not in (ts_col, op_col)]
-    bexpr = bucket_expr(keys, n)
-    touched = sorted(
-        r["b"] for r in batch.select(bexpr.alias("b")).distinct().collect()
-    )
-    if not touched:
-        return
-    snapshot_exists = fs.exists(src)
-    # no marker yet = bootstrap (no dataset) or MIGRATION (flat
-    # layout on disk): both need a full bucketed rewrite — the scoped
-    # path would graft bucket dirs next to flat files and lose the
-    # untouched rows from reads of the mixed root
-    full = (
-        bootstrap_marker
-        or (not snapshot_exists)
-        or len(touched) >= max(1, int(n * full_rewrite_fraction))
-    )
-    root = snapshot_path.rstrip("/")
-    if full:
-        if snapshot_exists:
-            base = read_snapshot(spark, snapshot_path)
+            # explicit per-bucket paths: the untouched buckets are
+            # never listed, opened, or read — this is the line that
+            # makes an epoch O(changed groups)
+            reads = [
+                p
+                for k in touched
+                if fs.exists(HPath(p := f"{root}/{BUCKET_COL}={k}"))
+            ]
+            staging = snapshot_path + "__bstage"
+        base_cols = [c for c in batch.columns if c not in (ts_col, op_col)]
+        if reads:
+            base = spark.read.parquet(*reads).select(*base_cols)
         else:
             base = spark.createDataFrame([], batch.select(*base_cols).schema)
         new_snap = apply_cdc(
             base, batch, key=keys, ts_col=ts_col, op_col=op_col,
             delete_op=delete_op,
         )
-        staging = snapshot_path + "__staging"
+        # mode('overwrite') discards a crashed attempt's leftover
+        # staging
         (
             new_snap.withColumn(BUCKET_COL, bucket_expr(keys, n))
-            .repartition(n, F.col(BUCKET_COL))
+            .repartition(n if full else len(touched), F.col(BUCKET_COL))
             .write.partitionBy(BUCKET_COL)
             .mode("overwrite")
             .parquet(staging)
         )
-        replace_dataset(
-            spark, staging, snapshot_path, backup_suffix="__presnap"
-        )
-    else:
-        live_dirs = [
-            p
-            for k in touched
-            if fs.exists(p := HPath(f"{root}/{BUCKET_COL}={k}"))
-        ]
-        if live_dirs:
-            # explicit per-bucket paths: the untouched buckets are
-            # never listed, opened, or read — this is the line that
-            # makes an epoch O(changed groups)
-            base = spark.read.parquet(*[str(p) for p in live_dirs])
-        else:
-            base = spark.createDataFrame([], batch.select(*base_cols).schema)
-        new_sub = apply_cdc(
-            base.select(*base_cols), batch, key=keys, ts_col=ts_col,
-            op_col=op_col, delete_op=delete_op,
-        )
-        staging = snapshot_path + "__bstage"
-        (
-            new_sub.withColumn(BUCKET_COL, bucket_expr(keys, n))
-            .repartition(len(touched), F.col(BUCKET_COL))
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        for k in touched:
-            staged = HPath(f"{staging}/{BUCKET_COL}={k}")
-            _swap_bucket(
-                fs, jvm, snapshot_path, k,
-                staged if fs.exists(staged) else None,
+        if full:
+            replace_dataset(
+                spark, staging, snapshot_path, backup_suffix="__presnap"
             )
-        fs.delete(HPath(staging), True)
-        spark.catalog.refreshByPath(snapshot_path)
-    if bootstrap_marker:
-        # written AFTER the data lands: a crash before this point
-        # leaves a bucketed-layout dataset without a marker, and the
-        # retried epoch takes the migrate path (one full bucketed
-        # rewrite) — converges
-        _write_bucket_meta(fs, jvm, snapshot_path, n, keys)
+        else:
+            for k in touched:
+                staged = HPath(f"{staging}/{BUCKET_COL}={k}")
+                _swap_bucket(
+                    fs, jvm, snapshot_path, k,
+                    staged if fs.exists(staged) else None,
+                )
+            fs.delete(HPath(staging), True)
+            spark.catalog.refreshByPath(snapshot_path)
+        if meta is None:
+            # written AFTER the data lands: a crash before this point
+            # leaves a bucketed-layout dataset without a marker, and
+            # the retried epoch takes the migrate path (one full
+            # bucketed rewrite) — converges
+            _write_bucket_meta(fs, jvm, snapshot_path, n, keys)
+    finally:
+        release_dataset_lock(spark, snapshot_path)
 
 
 def run_cdc_snapshot(
@@ -384,7 +342,6 @@ def run_cdc_snapshot(
     ts_col: str = "ts",
     op_col: str = "op",
     delete_op: str = "D",
-    snapshot_files: int = 8,
     buckets: int | None = None,
 ) -> None:
     """Drive :func:`apply_cdc_batch` from a Structured Streaming
@@ -394,9 +351,10 @@ def run_cdc_snapshot(
     batches is by arrival (a later micro-batch's upsert beats an
     earlier one's regardless of ts — CDC logs replay in order), and
     within a batch by (``ts_col``, ``op_col`` desc) per apply_cdc's
-    contract.  ``buckets=N`` selects the hash-bucketed snapshot
-    layout (per-epoch I/O scoped to touched buckets).  Partitions are
-    sized by :func:`events.drain` from the stream's own sources."""
+    contract — a batch repeating a (key, ts, op) is rejected.
+    ``buckets`` sizes the hash-bucketed snapshot (default: the
+    marker's N, else :data:`DEFAULT_BUCKETS`).  Partitions are sized
+    by :func:`events.drain` from the stream's own sources."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
@@ -407,7 +365,6 @@ def run_cdc_snapshot(
             ts_col=ts_col,
             op_col=op_col,
             delete_op=delete_op,
-            snapshot_files=snapshot_files,
             buckets=buckets,
         )
 

@@ -7,6 +7,7 @@ import math
 import pytest
 
 import __spark_entry__ as entry_mod
+from htsql_spark.derived import PARTSUPP_ORACLE_CTE as _PARTSUPP_CTE
 from tests.conftest import SF_DIR
 
 
@@ -112,3 +113,54 @@ def test_query_matches_oracle(spark, duck, name):
 def test_query_runs_rows_only(spark, name):
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
+
+
+def test_tpch_q20_empty_1996_sum_is_null(spark, tmp_path):
+    """A 'wid' part with no 1996 lineitem has an EMPTY correlated sum.
+    TPC-H Q20's ``ps_availqty > (SELECT ... sum(l_quantity) ...)``
+    compares against NULL there, so the part never qualifies its
+    supplier; the engine's ``sum(...)`` over an empty plural link is
+    NULL too (the ``agg_sum_count`` twin's LEFT JOIN ``sum`` agrees),
+    and the ``tpch_q20`` twin must not coalesce it to 0.  Fixture:
+    sf0.001 without the 1996 lineitems of even part keys and without
+    the orders of every tenth customer."""
+    import glob
+    import os
+    import shutil
+
+    import duckdb
+
+    filters = {
+        "lineitem": "NOT (year(l_shipdate) = 1996 AND l_partkey % 2 = 0)",
+        "orders": "o_custkey % 10 <> 0",
+    }
+    con = duckdb.connect()
+    for f in glob.glob(f"{SF_DIR}/*.parquet"):
+        t = os.path.basename(f)[: -len(".parquet")]
+        if t not in filters:
+            shutil.copyfile(f, tmp_path / f"{t}.parquet")
+            continue
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{f}') WHERE {filters[t]})"
+            f" TO '{tmp_path}/{t}.parquet' (FORMAT parquet)"
+        )
+    for t in ("supplier", "part", "customer", "orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM"
+            f" read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    # the fixture exercises the case: some supplier's 'wid' part has
+    # no 1996 line
+    (empty,) = con.execute(
+        _PARTSUPP_CTE
+        + " SELECT count(*) FROM partsupp JOIN part ON p_partkey = ps_partkey"
+        " WHERE contains(lower(p_name), 'wid') AND NOT EXISTS ("
+        " SELECT 1 FROM lineitem WHERE l_partkey = ps_partkey"
+        " AND year(l_shipdate) = 1996)"
+    ).fetchone()
+    assert empty > 0
+    for name in ("tpch_q20", "agg_sum_count"):
+        got = _rows(tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect())
+        assert got == _rows(con.execute(ORACLES[name]).fetchall()), name
+    # an order-less customer's total is NULL on both sides
+    assert any(r[1] is None and r[2] == 0 for r in got)

@@ -945,7 +945,7 @@ def test_cdc_snapshot_two_batches(spark, tmp_path):
     snap_path = str(tmp_path / "snapshot")
     streaming.run_cdc_snapshot(spark, stream, snap_path, key="k")
 
-    snap = spark.read.parquet(snap_path)
+    snap = streaming.snapshot.read_snapshot(spark, snap_path)
     assert sorted(snap.columns) == ["k", "name", "val"]
     got = {r.k: (r.name, r.val) for r in snap.collect()}
     assert got == {1: ("a", 1.0), 2: ("b2", 2.5), 4: ("d", 4.0)}
@@ -1112,10 +1112,10 @@ def test_cdc_bucketed_delete_and_full_rewrite_fallback(spark, tmp_path):
 
 
 def test_cdc_bucketed_migration_and_layout_pinning(spark, tmp_path):
-    """A bucketed call on an existing FLAT snapshot migrates it (one
-    full rewrite, marker written); thereafter the marker pins the
-    layout — omitting buckets keeps it, changing n or the key set is
-    a named error."""
+    """A bucketed call on an existing FLAT snapshot (the plain parquet
+    dataset an older engine left) migrates it (one full rewrite,
+    marker written); thereafter the marker pins the layout — omitting
+    buckets keeps it, changing n or the key set is a named error."""
     import glob
 
     import pytest as _pytest
@@ -1123,7 +1123,9 @@ def test_cdc_bucketed_migration_and_layout_pinning(spark, tmp_path):
     from htsql_spark.streaming.snapshot import apply_cdc_batch, read_snapshot
 
     path = str(tmp_path / "snap")
-    apply_cdc_batch(spark, _kv_batch(spark, 0, [("a", 1), ("b", 2)]), path, key="k")
+    spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long").write.parquet(
+        path
+    )
     assert not glob.glob(f"{path}/htsql__bucket=*")  # flat
     apply_cdc_batch(
         spark, _kv_batch(spark, 1, [("a", 9)]), path, key="k", buckets=4
@@ -1143,6 +1145,40 @@ def test_cdc_bucketed_migration_and_layout_pinning(spark, tmp_path):
     with _pytest.raises(ValueError, match="diverge"):
         apply_cdc_batch(
             spark, _kv_batch(spark, 3, [("a", 1)]), path, key=["k", "n"]
+        )
+
+
+def test_cdc_batch_rejects_repeated_key_ts_op(spark, tmp_path):
+    """Two changes to one key at the same (ts, op) have no defined
+    winner (apply_cdc's determinism contract), so the batch is
+    rejected before anything is written; the same key at two
+    different timestamps is an ordinary batch and the later one
+    wins."""
+    import os
+
+    from htsql_spark.streaming.snapshot import apply_cdc_batch, read_snapshot
+
+    path = str(tmp_path / "snap")
+    tie = _cdc_rows(spark, [(1, "a", 1.0, 5, "U"), (1, "b", 2.0, 5, "U")])
+    with pytest.raises(ValueError, match="uniquely identify"):
+        apply_cdc_batch(spark, tie, path, key="k")
+    assert not os.path.exists(path)
+    ordered = _cdc_rows(spark, [(1, "a", 1.0, 5, "U"), (1, "b", 2.0, 6, "U")])
+    apply_cdc_batch(spark, ordered, path, key="k")
+    got = [(r.k, r.name, r.val) for r in read_snapshot(spark, path).collect()]
+    assert got == [(1, "b", 2.0)]
+
+
+def test_cdc_batch_rejects_zero_buckets(spark, tmp_path):
+    """There is no flat layout to select any more: ``buckets=0`` (the
+    old spelling of it) is a named error, not a snapshot whose rows
+    all land in a null bucket."""
+    from htsql_spark.streaming.snapshot import apply_cdc_batch
+
+    with pytest.raises(ValueError, match="buckets must be >= 1"):
+        apply_cdc_batch(
+            spark, _kv_batch(spark, 0, [("a", 1)]), str(tmp_path / "s"),
+            key="k", buckets=0,
         )
 
 
@@ -1780,6 +1816,35 @@ def test_update_mode_multibatch_drain(spark, tmp_path):
                 changed_somewhere = True
     assert carried > 0, "no untouched bucket survived an epoch byte-identical"
     assert changed_somewhere, "no bucket ever changed across epochs"
+
+
+def test_update_epoch_job_budget(spark, db, tmp_path):
+    """An update-mode epoch pins its micro-batch once and plans the
+    MERGE with one aggregation job (touched buckets and the key
+    uniqueness check together).  Jobs are counted per micro-batch
+    under the stream's job group: the sf0.001 tumbling drain is one
+    data epoch (bootstrap: pin, plan, write) and one no-data epoch
+    (pin, plan).  A second pin or a separate duplicate-key job adds
+    jobs to both."""
+    import re
+
+    q = db.start_stream(
+        "/events.tumbling('1 day')",
+        str(tmp_path / "out"),
+        checkpoint=str(tmp_path / "cp"),
+        keys=["w_start", "w_end", "event_type"],
+    )
+    q.awaitTermination()
+    jsc = spark._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    per_batch: dict[int, int] = {}
+    for jid in spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)):
+        desc = store.job(jid).description()
+        batch = int(re.search(r"batch = (\d+)", desc.get()).group(1))
+        per_batch[batch] = per_batch.get(batch, 0) + 1
+    assert [p["numInputRows"] for p in q.recentProgress] == [1000, 0]
+    assert per_batch[0] <= 4 and per_batch[1] <= 2, per_batch
 
 
 def test_update_mode_guards(db):
